@@ -7,7 +7,7 @@
 
 PY ?= python
 
-.PHONY: preflight lint gate test check bench smoke
+.PHONY: preflight lint gate test check bench bench-test bench-legacy smoke
 
 # static lints + plan/registry invariants (no Spark jobs beyond plan
 # construction) then the CURRENT gate window against the DuckDB oracle
@@ -38,5 +38,18 @@ test:
 check:
 	$(PY) scripts/check_correctness.py
 
+# the repository benchmark (perfbench/README.md), both workloads
+BENCH_SEED ?= 1
+BENCH_SECONDS ?= 6
+
 bench:
+	for w in providers media_sinks; do \
+	  python3 perfbench/run.py --workload $$w --seed $(BENCH_SEED) --seconds $(BENCH_SECONDS) --trace 0 || exit 1; \
+	done
+
+bench-test:
+	python3 -m pytest perfbench/tests -q
+
+# the older single-line headline bench, until perfbench replaces it
+bench-legacy:
 	$(PY) bench.py

@@ -39,13 +39,10 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from vunnel_spark.session import TABLES  # noqa: E402
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 ONLY = set(sys.argv[2:])
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def canon(v) -> str:

@@ -191,3 +191,29 @@ def test_cli_compact_reports_rewrites(tmp_path, capsys, spark):
     assert out["rewritten"]["p=a"]["files_after"] < 8
     assert {r.v for r in spark.read.parquet(store).collect()} == set(range(100))
     assert main(["compact", str(tmp_path / "missing")]) == 2
+
+
+def test_cli_status_counts_every_table_through_load_tables(tmp_path, capsys, spark, sf_dir):
+    import json as jsonlib
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from vunnel_spark.session import TABLES
+
+    cfg = str(tmp_path / "absent.yaml")
+    part = tmp_path / "part"
+    part.mkdir()
+    for name in ("region", "nation"):
+        shutil.copy(os.path.join(sf_dir, f"{name}.parquet"), part)
+    assert main(["-c", cfg, "status", "--sf-dir", str(part)]) == 0
+    assert set(jsonlib.loads(capsys.readouterr().out)["tables"]) == {"region", "nation"}
+
+    assert main(["-c", cfg, "status", "--sf-dir", sf_dir]) == 0
+    out = jsonlib.loads(capsys.readouterr().out)
+    assert out["tables"] == {
+        name: pq.ParquetFile(os.path.join(sf_dir, f"{name}.parquet")).metadata.num_rows
+        for name in TABLES
+    }
+    assert out["queries"] == len(REGISTRY)

@@ -200,6 +200,20 @@ def test_png_roundtrip_all_filters_rgb_and_gray():
         assert np.array_equal(decode_png(enc), img), shape
 
 
+def test_png_sub_filter_rejects_stride_not_a_multiple_of_bpp():
+    import numpy as np
+    import pytest
+
+    from vunnel_spark.operators.multimodal import _defilter
+
+    raw = bytes([1]) + bytes(range(1, 7))  # one Sub-filtered 6-byte row
+    out, p = _defilter(raw, 0, 1, 6, 3)
+    assert p == len(raw)
+    assert out[0].tolist() == [1, 2, 3, 5, 7, 9]
+    with pytest.raises(ValueError, match="stride not a multiple of bpp"):
+        _defilter(raw, 0, 1, 6, 4)
+
+
 def test_png_chunk_layout_matches_independent_construction():
     """Encoder output must be byte-identical to a from-the-spec chunk
     construction done independently here (signature, IHDR field order,
@@ -1011,6 +1025,45 @@ def test_flac_integrity_checks_fire():
         decode_flac(bytes(enc2))
     with pytest.raises(ValueError, match="FLAC"):
         decode_flac(b"RIFFnotflac")
+
+
+def test_flac_fixed_subframe_rejects_out_of_range_residuals():
+    """A FIXED residual beyond 2^(bits+order-1), or one that integrates to
+    a difference beyond its level's bound, fails instead of wrapping int64."""
+    import pytest
+
+    from vunnel_spark.operators.multimodal import (
+        _PlainBitReader,
+        _PlainBitWriter,
+        _read_flac_subframe,
+    )
+
+    def subframe(order, warm, res, bits=16):
+        bw = _PlainBitWriter()
+        bw.write(0, 1)  # padding
+        bw.write(8 + order, 6)  # FIXED, this order
+        bw.write(0, 1)  # no wasted bits
+        for w in warm:
+            bw.write(w, bits)
+        bw.write(0, 2)  # rice, 4-bit params
+        bw.write(0, 4)  # one partition
+        bw.write(15, 4)  # escape: raw signed residuals
+        bw.write(31, 5)
+        for r in res:
+            bw.write(r, 31)
+        bw.align()
+        return _read_flac_subframe(_PlainBitReader(bw.bytes()), len(warm) + len(res), bits)
+
+    # in range: a ramp decodes exactly
+    assert subframe(2, [0, 5], [0] * 6) == [0, 5, 10, 15, 20, 25, 30, 35]
+    assert subframe(1, [-32768], [65535]) == [-32768, 32767]
+    with pytest.raises(ValueError, match="residual out of range"):
+        subframe(1, [0], [1, (1 << 16) + 1])
+    with pytest.raises(ValueError, match="residual out of range"):
+        subframe(4, [0, 0, 0, 0], [-(1 << 19) - 1])
+    # every residual in range, but their integral leaves int16
+    with pytest.raises(ValueError, match="reconstruction out of range"):
+        subframe(4, [0, 0, 0, 0], [1 << 19] * 64)
 
 
 def test_flac_audio_features_match_wav_law(spark, sf_dir):

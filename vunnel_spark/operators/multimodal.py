@@ -309,17 +309,14 @@ def _defilter(raw, p: int, rows: int, stride: int, ch: int):
         elif f == 2:
             rec = (line + prev) % 256
         elif f == 1:
-            # Sub: rec[x] = line[x] + rec[x-ch] — per-channel prefix sum,
-            # so the whole row is one cumsum mod 256 (r15; the r14
-            # per-pixel Python loop was the decode hot spot on the tiny
-            # synthesized corpus images, ~stride iterations per row)
-            n = stride // ch
-            if n * ch == stride:
-                rec = (
-                    line.reshape(n, ch).cumsum(axis=0, dtype=np.int64) % 256
-                ).reshape(stride).astype(np.int32)
-            else:  # stride not a channel multiple cannot occur for valid
-                rec = line.copy()  # images; fall back to no-predictor
+            # Sub: rec[x] = line[x] + rec[x-ch] — a per-channel prefix
+            # sum, so the whole row is one cumsum mod 256
+            n, rem = divmod(stride, ch)
+            if rem:
+                raise ValueError("stride not a multiple of bpp")
+            rec = (
+                line.reshape(n, ch).cumsum(axis=0, dtype=np.int64) % 256
+            ).reshape(stride).astype(np.int32)
         elif f in (3, 4):
             # True left-neighbor recurrence — stays a scalar loop, but
             # over PYTHON ints (numpy per-element indexing pays ~10x in
@@ -3749,19 +3746,31 @@ def _read_flac_subframe(br, blocksize: int, bits: int = 16) -> list:
         if order == 0:
             return res
         # FIXED reconstruction = order-fold integration of the residual
-        # difference sequence (r15): res[m] is diff^order(x)[m], so each
-        # level j recovers diff^j(x) as last-warmup-diff + cumsum of the
-        # level above — one cumsum per order instead of a per-sample
-        # Python convolution.  int64 exact: |sample| < 2^17, order <= 4
-        # diffs < 2^21, cumsum over <= 65536 samples < 2^38.
+        # difference sequence: res[m] is diff^order(x)[m], so each level
+        # j recovers diff^j(x) as last-warmup-diff + cumsum of the level
+        # above — one cumsum per order instead of a per-sample Python
+        # convolution.  diff^j of ``bits``-bit samples is bounded by
+        # 2^(bits+j-1), so a residual or an intermediate level beyond its
+        # bound is a corrupt stream.  Checking every level that feeds a
+        # cumsum keeps each cumsum's input under 2^(bits+order-1), so over
+        # <= 65536 samples int64 is exact.
         import numpy as np
 
-        seq = np.asarray(res, dtype=np.int64)
+        lim = 1 << (bits + order - 1)
+        try:
+            seq = np.asarray(res, dtype=np.int64)
+        except OverflowError:
+            seq = None
+        if seq is None or seq.size and (seq.max() > lim or seq.min() < -lim):
+            raise ValueError("FLAC FIXED residual out of range")
         levels = [np.asarray(warm, dtype=np.int64)]
         for _ in range(1, order):
             levels.append(np.diff(levels[-1]))
         for j in range(order - 1, -1, -1):
             seq = levels[j][-1] + np.cumsum(seq)
+            lim >>= 1
+            if j and seq.size and (seq.max() > lim or seq.min() < -lim):
+                raise ValueError("FLAC FIXED reconstruction out of range")
         return warm + seq.tolist()
     if stype >= 32:  # LPC, order = low 5 bits + 1
         order = (stype & 0x1F) + 1

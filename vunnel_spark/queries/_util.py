@@ -1,9 +1,11 @@
 """Shared helpers for query modules.
 
-Lives outside any registering module so cross-module reuse (graph_q and
-dedup share the near-dup corpus construction) never perturbs registry
-insertion order — the external gate reads the first 50 entries, and a
-helper import that drags a whole query module in would shift the window.
+Helpers used by more than one query module (graph_q and dedup share the
+near-dup corpus construction) live here, outside every registering
+module, so importing a helper never imports another query module as a
+side effect.  Registry insertion order is therefore fixed by the module
+walk in ``queries/__init__.py`` alone, and this module, whose name starts
+with ``_``, registers nothing.
 """
 
 from __future__ import annotations

@@ -13,10 +13,27 @@ partition-count agnostic because AQE coalesces post-shuffle.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> str:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+DEFAULT_CPUS = default_cpus()
+
+#: the tables a scale-factor directory holds, as ``<name>.parquet``
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+#: inferred parquet schema per file identity ``(abspath, st_mtime_ns, st_size)``
+_SCHEMA_MEMO: dict[tuple[str, int, int], StructType] = {}
 
 
 def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> SparkSession:
@@ -43,40 +60,23 @@ def get_spark(app_name: str = "vunnel_spark", cpus: str | int | None = None) -> 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # ContextCleaner frees broadcast blocks and shuffle files only
-        # when the DRIVER GC collects their references; with a 16 GiB
+        # when the driver GC collects their references.  With a 16 GiB
         # heap a multi-query session can run for many minutes without a
-        # full GC, so debris from dozens of earlier queries piles onto
-        # the block manager and every later query measures slower (the
-        # in-session degradation the r14 profile sessions kept seeing —
-        # x1's bench slot read 7x its fresh-session time late in a run).
-        # Spark's own escape hatch is periodic driver GC; the 30min
-        # default never fires inside a local session, 2min does.  Scale
-        # note: this is session housekeeping, not a local[32] tune — on
-        # a cluster the same accumulation hits long-lived drivers.
-        # r15 adjudication (VERDICT r14 what's-wrong #2): a 12-run
-        # interleaved fresh-session A/B showed 2min fires a full GC
-        # INSIDE a ~100 s bench run — 2 of 4 samples inflated ~45%
-        # (17.3/17.4 s vs the arm's 11-12 s floor) — while 10min and
-        # 30min never fire mid-bench (10.2-14.5 s, medians ~10.7).
-        # 10min keeps the r14 long-session debris collection (fires
-        # every 10 min in sweep sessions, bounding ContextCleaner
-        # backlog) without ever landing inside a short timed run.
+        # full GC, so debris from earlier queries piles onto the block
+        # manager and later queries slow down.  Periodic driver GC bounds
+        # that backlog; the interval must stay longer than a timed run
+        # (2 min fired inside ~100 s bench runs and inflated samples by
+        # ~45%) and shorter than a long sweep session (Spark's 30 min
+        # default never fires in one).
         .config("spark.cleaner.periodicGC.interval",
                 os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"))
-        # The JVM JIT refuses to compile methods over 8000 bytecode bytes
-        # (HotSpot -XX:DontCompileHugeMethods, HugeMethodLimit=8000 — a
-        # property of every executor JVM, not of local[32]), so a fused
-        # WholeStageCodegen stage whose generated method lands between
-        # 8000 and Spark's default fallback threshold (65535) compiles
-        # fine yet runs BYTECODE-INTERPRETED forever.  Aligning Spark's
-        # fallback with the JIT limit makes exactly those stages fall
-        # back to per-operator codegen (each operator's UnsafeProjection
-        # is its own small, JIT-able method).  r15 audit
-        # (scripts/audit_codegen_size.py): 6 registered queries sat in
-        # the dead zone — ghsa1 42.3 KB, e17 32.7 KB, rhel1 21.2 KB,
-        # rhel2 12.3 KB, d5 9.4 KB, photon1 9.3 KB — and the e17 sf10
-        # A/B measured the interpreted fused stage at ~32 s vs ~17 s
-        # with the fallback (OPTIMIZATION_r15.md).
+        # HotSpot never JIT-compiles a method over 8000 bytecode bytes
+        # (-XX:DontCompileHugeMethods), so a fused WholeStageCodegen
+        # method between 8000 bytes and Spark's default fallback (65535)
+        # would run interpreted.  Aligning the fallback with the JIT
+        # limit makes such stages fall back to per-operator codegen,
+        # whose methods are small enough to compile
+        # (scripts/audit_codegen_size.py lists the stages in that range).
         .config("spark.sql.codegen.hugeMethodLimit",
                 os.environ.get("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
         .config("spark.ui.enabled", "false")
@@ -100,12 +100,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict:
     Returns ``{name: DataFrame}``.  Reads are lazy; registering views lets
     query code use either the DataFrame API or spark.sql on the same names.
     """
-    names = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
     out = {}
-    for name in names:
+    for name in TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
             out[name] = load_table(spark, sf_dir, name)
@@ -113,8 +109,30 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict:
     return out
 
 
+def _file_identity(path: str) -> tuple[str, int, int] | None:
+    """Memo key for a regular file; None for a directory or a missing path."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return os.path.abspath(path), st.st_mtime_ns, st.st_size
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one test table, normalizing driver-data quirks.
+
+    Schema inference runs once per file identity.  Spark infers a parquet
+    schema with a job that reads the footers, so the inferred
+    ``StructType`` is memoized in ``_SCHEMA_MEMO`` under the file's
+    ``(absolute path, st_mtime_ns, st_size)``, and later reads pin it with
+    ``spark.read.schema(...)``: no job, no footer read on the driver.  A
+    file rewritten in place gets a new mtime (and usually size), hence a
+    new key and a fresh inference.  The memo holds plain data, not JVM
+    objects, so it survives ``spark.stop()``.  A directory (a
+    Spark-written dataset) is inferred on every call: its files can change
+    without its own mtime or size moving.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS) which Spark reads as int64
     nanos (legacy.parquet.nanosAsLong); convert to a µs timestamp with
@@ -123,31 +141,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     from pyspark.sql import functions as F
 
     # The caller may hand us an arbitrary session (the correctness driver
-    # builds its own), so the nanos conf must be applied at read time, not
-    # only in get_spark()'s builder.  It is runtime-settable.
+    # builds its own), so the confs that shape inference are applied here,
+    # before the read, not only in get_spark()'s builder.  Both are
+    # runtime-settable, and the memo is valid only because every inference
+    # runs under these same values.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = _file_identity(path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key:
+            _SCHEMA_MEMO[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    if name == "events" and "ts" in schema.names and schema["ts"].dataType == LongType():
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Driver parquet may carry tz-naive timestamps, which Spark 4 reads as
     # TIMESTAMP_NTZ.  unix_micros() and withWatermark() both reject NTZ by
     # spec; the session timezone is pinned to UTC, so casting to the
     # tz-aware type is a pure metadata change with identical semantics.
-    for cname, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(cname, F.col(cname).cast("timestamp"))
-    # Fixture-partitioning policy (VERDICT r13 "What's wrong #1b"): the
-    # driver's single-file, single-row-group parquet collapses every scan
-    # to ONE input partition, so a scan-rooted query with no exchange
-    # (rhel2, e17, ...) serializes on one core at local[32] and the
-    # measurement reflects the file layout, not the operator.  At
-    # production scale the same scan has thousands of splits, so baking a
-    # repartition into the registered plans would add a pure-overhead
-    # shuffle; instead, measurement harnesses (scripts/scalecurve.py)
-    # opt in via VS_SCAN_MIN_PARTITIONS=<n> and correctness gates /
-    # registered plans stay exchange-free by default.  Tiny dims are
-    # exempt (fanning out 25 nation rows only adds scheduling overhead).
+    for field in schema.fields:
+        if isinstance(field.dataType, TimestampNTZType):
+            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+    # Registered plans stay exchange-free: at production scale a scan has
+    # many splits, and a built-in repartition would be a pure-overhead
+    # shuffle.  A single-file, single-row-group fixture scans as one input
+    # partition, though, so a scan-rooted query with no exchange runs on
+    # one core; measurement harnesses that want the scan spread over cores
+    # opt in with VS_SCAN_MIN_PARTITIONS=<n>.  Tiny dimension tables are
+    # exempt: fanning out 25 nation rows only adds scheduling overhead.
     fanout = int(os.environ.get("VS_SCAN_MIN_PARTITIONS", "0"))
     if fanout > 1 and name not in ("region", "nation", "supplier"):
         df = df.repartition(fanout)
